@@ -12,7 +12,6 @@ exactly once per row even under task retries, unlike raw accumulators).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 def with_counters(
@@ -28,17 +27,3 @@ def with_counters(
     obs = Observation(name)
     cols = [expr.alias(key) for key, expr in metrics.items()]
     return df.observe(obs, *cols), obs
-
-
-def record_counters(df: DataFrame, name: str = "records") -> tuple[DataFrame, Observation]:
-    """The TaskCounter basics: record count + null-free count per run."""
-    no_null = None
-    for c in df.columns:
-        cond = F.col("`" + c.replace("`", "``") + "`").isNotNull()
-        no_null = cond if no_null is None else (no_null & cond)
-    return with_counters(
-        df,
-        name,
-        input_records=F.count(F.lit(1)),
-        null_free_records=F.count(F.when(no_null if no_null is not None else F.lit(True), 1)),
-    )

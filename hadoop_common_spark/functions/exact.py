@@ -76,10 +76,6 @@ def davg(col: Column | str, scale: int = 6) -> Column:
     return dsum(c, scale) / F.count(c)
 
 
-def davg_sql(expr: str, scale: int = 6) -> str:
-    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
-
-
 def dstddev_pop(col: Column | str) -> Column:
     """Population stddev via exact decimal sums (sum, sum of squares).
 
@@ -95,27 +91,9 @@ def dstddev_pop(col: Column | str) -> Column:
     return F.sqrt((sq - s * s / n) / n)
 
 
-def dstddev_pop_sql(expr: str) -> str:
-    n = f"CAST(COUNT({expr}) AS DOUBLE)"
-    s = dsum_sql(expr)
-    # same STRING hop as dsum_sql: the sum-of-squares grows past
-    # 2**53 scaled units even sooner than the plain sum
-    sq = f"CAST(CAST(SUM(CAST(({expr}) * ({expr}) AS DECIMAL(30,6))) AS STRING) AS DOUBLE)"
-    return f"SQRT(({sq} - {s} * {s} / {n}) / {n})"
-
-
 def dstddev_samp(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n = F.count(c).cast("double")
     s = dsum(c)
     sq = F.sum((c * c).cast("decimal(30,6)")).cast("double")
     return F.sqrt((sq - s * s / n) / (n - F.lit(1.0)))
-
-
-def dstddev_samp_sql(expr: str) -> str:
-    n = f"CAST(COUNT({expr}) AS DOUBLE)"
-    s = dsum_sql(expr)
-    # same STRING hop as dsum_sql: the sum-of-squares grows past
-    # 2**53 scaled units even sooner than the plain sum
-    sq = f"CAST(CAST(SUM(CAST(({expr}) * ({expr}) AS DECIMAL(30,6))) AS STRING) AS DOUBLE)"
-    return f"SQRT(({sq} - {s} * {s} / {n}) / ({n} - 1.0))"

@@ -16,6 +16,21 @@ asks for, built Spark-first:
   and the final verify join. Signature computation is map-side (16 min()
   partial aggregates). At 100 TB the band join's fan-out is bounded by
   bucket sizes — salt or raise `bands`/`rows` if a bucket explodes.
+- Builder cost: the pair builders a registry query calls on every run
+  (``minhash_lsh_pairs``, ``simhash``, ``simhash_pairs``, plus
+  ``word_shingles`` and textstats' ``token_count``/``quality_score``)
+  build their expressions as parsed SQL (``selectExpr``, ``F.expr``,
+  string ``filter``). Each Column-API call is at least one py4j round
+  trip, and PySpark 4 wraps most of them in call-site capture
+  (``getActiveSession``, ``conf.get``, origin set/clear) on top. Py4j
+  commands for one warm registry build on the perfbench ``corpus`` input,
+  Column API → parsed SQL: ``dedup_minhash_lsh`` 2,510 → 245,
+  ``dedup_simhash_pairs`` 1,313 → 545, ``pipeline_clean_corpus`` 673 → 263.
+  The optimized plans are unchanged except that ``struct`` prints as
+  ``named_struct``. Everywhere else the Column API stays: it is the
+  clearer form where a builder runs once or off the query path. Parsed
+  SQL splices ``id_col`` next to the builder's own aliases, so a builder
+  rejects an ``id_col`` that collides with them (``_guard_id_col``).
 """
 
 from __future__ import annotations
@@ -85,6 +100,8 @@ def minhash_j(base: Column, j: int) -> Column:
 
 
 def minhash_j_sql(base_expr: str, j: int) -> str:
+    """SQL rendering of :func:`minhash_j`; the same text parses to the
+    same expression in Spark and in DuckDB."""
     a, b = _mh_coeffs(j)
     return f"(({a} * {base_expr} + {b}) % {MERSENNE61})"
 
@@ -103,6 +120,38 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _q(name: str) -> str:
+    """Backtick-quote a column name for parsed SQL."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _guard_id_col(fn: str, id_col: str, internal: set[str]) -> None:
+    """Reject an ``id_col`` that parsed SQL cannot splice safely: one
+    containing a backtick, or one equal (case-insensitively, like Spark's
+    resolver) to an alias the builder creates beside it — that collision
+    would otherwise surface deep in analysis as [AMBIGUOUS_REFERENCE]."""
+    if "`" in id_col or id_col.lower() in internal:
+        raise ValueError(f"{fn}: id_col {id_col!r} collides with internal aliases")
+
+
+def _md5_int_sql(expr: str, hexdigits: int) -> str:
+    """Spark SQL rendering of :func:`hash32` (8 hex digits) and
+    :func:`hash60` (``HEX15``)."""
+    return f"CAST(conv(substring(md5({expr}), 1, {hexdigits}), 16, 10) AS BIGINT)"
+
+
+def _word_shingles_sql(text_col: str, n: int) -> str:
+    toks = rf"split({_q(text_col)}, '\\s+')"
+    m = f"greatest(size({toks}) - {n - 1}, 0)"
+    zipped = f"slice({toks}, 1, {m})"
+    for k in range(1, n):
+        zipped = (
+            f"zip_with({zipped}, slice({toks}, {k + 1}, {m}),"
+            " (x, y) -> concat_ws(' ', x, y))"
+        )
+    return f"array_distinct({zipped})"
+
+
 def word_shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (docs with <n
     tokens yield an empty array).
@@ -113,22 +162,7 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     so the indexed form splits the text ~n× per GRAM (~150× per doc;
     measured 5× slower end-to-end). The slice form references ``toks``
     O(n) times per ROW."""
-    toks = F.split(F.col(text_col), r"\s+")
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    zipped = F.slice(toks, 1, m)
-    for k in range(1, n):
-        zipped = F.zip_with(
-            zipped, F.slice(toks, k + 1, m), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    return F.array_distinct(zipped)
-
-
-def word_shingles_sql(text_expr: str, n: int = 3) -> str:
-    parts = " || ' ' || ".join(f"t[i+{k}]" for k in range(n))
-    return (
-        f"list_distinct(list_transform(generate_series(1, len(t)-{n-1}), i -> {parts}))"
-        f" /* t := string_split_regex({text_expr}) */"
-    )
+    return F.expr(_word_shingles_sql(text_col, n))
 
 
 def minhash_signature(
@@ -186,12 +220,14 @@ def lsh_band_keys(sig_df: DataFrame, id_col: str, bands: int, rows: int) -> Data
     band_key are candidates (AND within band, OR across bands)."""
     band_structs = []
     for b in range(bands):
-        cols = [F.col(f"h{b * rows + r}") for r in range(rows)]
-        key = F.md5(F.concat_ws(",", *[c.cast("string") for c in cols]))
-        band_structs.append(F.struct(F.lit(b).alias("band"), key.alias("band_key")))
-    return sig_df.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("_b")
-    ).select(id_col, F.col("_b.band").alias("band"), F.col("_b.band_key").alias("band_key"))
+        cols = ", ".join(f"CAST(h{b * rows + r} AS STRING)" for r in range(rows))
+        band_structs.append(
+            f"named_struct('band', {b}, 'band_key', md5(concat_ws(',', {cols})))"
+        )
+    i = _q(id_col)
+    return sig_df.selectExpr(i, f"explode(array({', '.join(band_structs)})) AS _b").selectExpr(
+        i, "_b.band AS band", "_b.band_key AS band_key"
+    )
 
 
 def minhash_lsh_pairs(
@@ -209,14 +245,25 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard), id_a < id_b. Jaccard is exact over
     distinct shingle sets (integer set sizes → double division —
-    deterministic across engines).
+    deterministic across engines). ``id_col`` is spliced into parsed SQL
+    (module note), so it must not contain a backtick or equal one of the
+    internal aliases ``_one``/``_base``/``_shset``/``h0..h{n-1}``/
+    ``_keys``/``_b``/``band``/``band_key``/``id_a``/``id_b``/``sh_a``/
+    ``sh_b`` (``ValueError``).
     """
     if num_hashes % bands != 0:
         raise ValueError(
             f"bands={bands} must divide num_hashes={num_hashes} — a remainder "
             "would silently weaken the (bands, rows) LSH guarantee"
         )
+    _guard_id_col(
+        "minhash_lsh_pairs",
+        id_col,
+        {"_one", "_base", "_shset", "_keys", "_b", "band", "band_key",
+         "id_a", "id_b", "sh_a", "sh_b"} | {f"h{j}" for j in range(num_hashes)},
+    )
     rows = num_hashes // bands
+    i = _q(id_col)
     # One shingling pass total: the signature groupBy collects the
     # distinct shingle set alongside the minhashes, and the result is
     # localCheckpoint'ed — the sketch table all three consumers (band
@@ -230,15 +277,12 @@ def minhash_lsh_pairs(
     # MEMORY_AND_DISK and one row per doc (16 longs + the distinct
     # shingle set) — the "write the sketch table between stages" shape
     # simhash_pairs already uses.
-    sh_rows = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, shingle_n)).alias("_one")
-    ).withColumn("_base", hash32(F.col("_one")))
+    sh_rows = df.selectExpr(
+        i, f"explode({_word_shingles_sql(text_col, shingle_n)}) AS _one"
+    ).selectExpr(i, "_one", f"{_md5_int_sql('_one', 8)} AS _base")
     sig = sh_rows.groupBy(id_col).agg(
-        *[
-            F.min(minhash_j(F.col("_base"), j)).alias(f"h{j}")
-            for j in range(num_hashes)
-        ],
-        F.collect_set("_one").alias("_shset"),
+        *[F.expr(f"min({minhash_j_sql('_base', j)}) AS h{j}") for j in range(num_hashes)],
+        F.expr("collect_set(_one) AS _shset"),
     ).localCheckpoint(eager=False)
     if max_bucket_size is None:
         # FIRST-MATCH-BAND candidate dedup (same trick as simhash_pairs):
@@ -254,32 +298,21 @@ def minhash_lsh_pairs(
         # strings, and 4 md5 calls per doc disappear. The capped path
         # keeps lsh_band_keys' md5 form — occupancy semantics there are
         # part of the oracle contract.
-        keys = [
-            F.struct(
-                *[F.col(f"h{b * rows + r}").alias(f"k{r}") for r in range(rows)]
-            )
+        keys = ", ".join(
+            "named_struct("
+            + ", ".join(f"'k{r}', h{b * rows + r}" for r in range(rows))
+            + ")"
             for b in range(bands)
-        ]
-        bk = sig.select(
-            F.col(id_col), F.array(*keys).alias("_keys")
-        ).select(
-            id_col, "_keys", F.posexplode("_keys").alias("band", "band_key")
         )
-        a = bk.select(
-            F.col(id_col).alias("id_a"), F.col("_keys").alias("_ka"), "band", "band_key"
+        bk = sig.selectExpr(i, f"array({keys}) AS _keys").selectExpr(
+            i, "_keys", "posexplode(_keys) AS (band, band_key)"
         )
-        b = bk.select(
-            F.col(id_col).alias("id_b"), F.col("_keys").alias("_kb"), "band", "band_key"
-        )
-        first_eq = F.coalesce(
-            *[
-                F.when(
-                    F.element_at("_ka", j + 1) == F.element_at("_kb", j + 1),
-                    F.lit(j),
-                )
-                for j in range(bands)
-            ]
-        )
+        a = bk.selectExpr(f"{i} AS id_a", "_keys AS _ka", "band", "band_key")
+        b = bk.selectExpr(f"{i} AS id_b", "_keys AS _kb", "band", "band_key")
+        first_eq = "coalesce(" + ", ".join(
+            f"CASE WHEN element_at(_ka, {j + 1}) = element_at(_kb, {j + 1}) THEN {j} END"
+            for j in range(bands)
+        ) + ")"
         cand = (
             # NO merge hint here, unlike the shingle/chunk self-joins: the
             # r13 A/B measured the SMJ form 2x WORSE at the 10x tier
@@ -289,8 +322,8 @@ def minhash_lsh_pairs(
             # per doc of fixed-width longs, the one estimator blind spot
             # in this family whose hash build actually wins.
             a.join(b, ["band", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(first_eq == F.col("band"))
+            .filter("id_a < id_b")
+            .filter(f"{first_eq} = band")
             .select("id_a", "id_b")
         )
     else:
@@ -303,29 +336,29 @@ def minhash_lsh_pairs(
         # distinct stays.
         ok = (
             bk.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") <= max_bucket_size)
+            .agg(F.expr("count(1) AS _occ"))
+            .filter(f"_occ <= {int(max_bucket_size)}")
             .select("band", "band_key")
         )
         bk = bk.join(ok, ["band", "band_key"])
-        a = bk.select(F.col(id_col).alias("id_a"), "band", "band_key")
-        b = bk.select(F.col(id_col).alias("id_b"), "band", "band_key")
+        a = bk.selectExpr(f"{i} AS id_a", "band", "band_key")
+        b = bk.selectExpr(f"{i} AS id_b", "band", "band_key")
         cand = (
             a.join(b, ["band", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
+            .filter("id_a < id_b")
             .select("id_a", "id_b")
             .distinct()
         )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("_shset").alias("sh_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("_shset").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
+    sa = sig.selectExpr(f"{i} AS id_a", "_shset AS sh_a")
+    sb = sig.selectExpr(f"{i} AS id_b", "_shset AS sh_b")
+    inter = "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
+    union = f"(CAST(size(sh_a) + size(sh_b) AS DOUBLE) - {inter})"
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .selectExpr("id_a", "id_b", f"{inter} / {union} AS jaccard")
+        # D suffix: an unsuffixed SQL 0.5 is DECIMAL, not DOUBLE
+        .filter(f"jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -359,26 +392,15 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFr
     aggregate merges duplicate ids' token multisets into ONE fingerprint
     row, where the r1-r11 per-row fold emitted one row per input row.
     And because ``id_col`` is interpolated into parsed SQL, it must not
-    collide with the internal aliases ``_h``/``_n``/``_c0.._c59`` or
+    collide with the internal aliases ``_h``/``_n``/``_t``/``_c0.._c59`` or
     contain a backtick; every registry caller passes a plain unique key
     column (doc_id)."""
-    if (
-        id_col in {"_h", "_n", "_t"}
-        or (id_col.startswith("_c") and id_col[2:].isdigit())
-        or "`" in id_col
-    ):
-        raise ValueError(f"simhash: id_col {id_col!r} collides with internal aliases")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    th = df.select(F.col(id_col), F.explode_outer(toks).alias("_t")).select(
-        F.col(id_col), hash60(F.col("_t")).alias("_h")
+    _guard_id_col("simhash", id_col, {"_h", "_n", "_t"} | {f"_c{j}" for j in range(bits)})
+    i = _q(id_col)
+    toks = rf"filter(split({_q(text_col)}, '\\s+'), x -> x != '')"
+    th = df.selectExpr(i, f"explode_outer({toks}) AS _t").selectExpr(
+        i, f"{_md5_int_sql('_t', HEX15)} AS _h"
     )
-    # SQL-string expressions, not 60 Column-API trees: each F.sum/F.when/
-    # operator call is a py4j round trip, and the Column-API form spent
-    # 5-7 SECONDS of driver time just CONSTRUCTING the plan (measured via
-    # build-vs-run split; the bench times construction too, and on a real
-    # cluster that is dead driver time before any task launches). One
-    # F.expr per aggregate + one parsed fingerprint expression is ~60
-    # round trips instead of ~1000.
     g = th.groupBy(id_col).agg(
         F.expr("count(1) AS _n"),
         *[F.expr(f"sum(shiftright(_h, {j}) & 1) AS _c{j}") for j in range(bits)],
@@ -387,7 +409,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFr
         f"IF(2 * _c{j} > _n, CAST({1 << j} AS BIGINT), CAST(0 AS BIGINT))"
         for j in range(bits)
     )
-    return g.selectExpr(f"`{id_col}`", f"({fp}) AS simhash")
+    return g.selectExpr(i, f"({fp}) AS simhash")
 
 
 def simhash_pairs(
@@ -426,22 +448,23 @@ def simhash_pairs(
     chunks = max_distance + 1
     if bits % chunks:
         raise ValueError(f"bits={bits} must divide into {chunks} equal chunks")
+    _guard_id_col(
+        "simhash_pairs",
+        id_col,
+        {"_fp", "_c", "chunk", "chunk_val", "id_a", "id_b", "_fa", "_fb"},
+    )
     width = bits // chunks
     mask = (1 << width) - 1
-    fp = fp_df.select(
-        F.col(id_col), F.col(sim_col).cast("bigint").alias("_fp")
-    ).localCheckpoint(eager=False)
-    chunk_structs = [
-        F.struct(
-            F.lit(k).alias("chunk"),
-            F.shiftright(F.col("_fp"), k * width).bitwiseAND(F.lit(mask)).alias("chunk_val"),
-        )
+    i = _q(id_col)
+    fp = fp_df.selectExpr(i, f"CAST({_q(sim_col)} AS BIGINT) AS _fp").localCheckpoint(
+        eager=False
+    )
+    chunk_structs = ", ".join(
+        f"named_struct('chunk', {k}, 'chunk_val', shiftright(_fp, {k * width}) & {mask})"
         for k in range(chunks)
-    ]
-    ck = fp.select(
-        F.col(id_col), F.col("_fp"), F.explode(F.array(*chunk_structs)).alias("_c")
-    ).select(
-        id_col, "_fp", F.col("_c.chunk").alias("chunk"), F.col("_c.chunk_val").alias("chunk_val")
+    )
+    ck = fp.selectExpr(i, "_fp", f"explode(array({chunk_structs})) AS _c").selectExpr(
+        i, "_fp", "_c.chunk AS chunk", "_c.chunk_val AS chunk_val"
     )
     if max_bucket_size is not None:
         # occupancy guard, same rationale as skew.capped_self_join_pairs:
@@ -450,15 +473,14 @@ def simhash_pairs(
         # chunks when genuinely close
         ok = (
             ck.groupBy("chunk", "chunk_val")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") <= max_bucket_size)
+            .agg(F.expr("count(1) AS _occ"))
+            .filter(f"_occ <= {int(max_bucket_size)}")
             .select("chunk", "chunk_val")
         )
         ck = ck.join(ok, ["chunk", "chunk_val"])
-    a = ck.select(F.col(id_col).alias("id_a"), F.col("_fp").alias("_fa"), "chunk", "chunk_val")
-    b = ck.select(F.col(id_col).alias("id_b"), F.col("_fp").alias("_fb"), "chunk", "chunk_val")
-    xor = F.col("_fa").bitwiseXOR(F.col("_fb"))
-    hamming = F.bit_count(xor).cast("bigint")
+    a = ck.selectExpr(f"{i} AS id_a", "_fp AS _fa", "chunk", "chunk_val")
+    b = ck.selectExpr(f"{i} AS id_b", "_fp AS _fb", "chunk", "chunk_val")
+    hamming = "CAST(bit_count(_fa ^ _fb) AS BIGINT) AS hamming"
     # merge hint (r13): the chunk table is corpus-sized (chunks rows per
     # document), but the planner estimates it from the tiny checkpointed
     # (id, fp) sketch and BROADCASTS one whole side — a hash-relation
@@ -467,7 +489,7 @@ def simhash_pairs(
     # — and the broadcast shape cannot exist at 100 TB anyway (the build
     # side only "fits" while the estimator is wrong, exactly the
     # shared_span_pairs artifact).
-    cand = a.join(b.hint("merge"), ["chunk", "chunk_val"]).filter(F.col("id_a") < F.col("id_b"))
+    cand = a.join(b.hint("merge"), ["chunk", "chunk_val"]).filter("id_a < id_b")
     if max_bucket_size is None:
         # FIRST-MATCH-BAND dedup (the classic LSH trick): a qualifying
         # pair shares >=1 chunk, so emit it ONLY from its lowest-index
@@ -478,27 +500,20 @@ def simhash_pairs(
         # max_bucket_size: a capped-away bucket can be the lowest
         # agreeing chunk while the pair legitimately survives through a
         # later band — there the distinct stays.
-        first_eq = F.coalesce(
-            *[
-                F.when(
-                    F.shiftright(xor, j * width).bitwiseAND(F.lit(mask)) == 0,
-                    F.lit(j),
-                )
-                for j in range(chunks)
-            ]
-        )
+        first_eq = "coalesce(" + ", ".join(
+            f"CASE WHEN shiftright(_fa ^ _fb, {j * width}) & {mask} = 0 THEN {j} END"
+            for j in range(chunks)
+        ) + ")"
         return (
-            cand.filter(first_eq == F.col("chunk"))
-            .withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= max_distance)
-            .select("id_a", "id_b", "hamming")
+            cand.filter(f"{first_eq} = chunk")
+            .selectExpr("id_a", "id_b", hamming)
+            .filter(f"hamming <= {int(max_distance)}")
         )
     return (
         # verify BEFORE the dedup shuffle: popcount is a few instructions,
         # and pruning failed candidates early shrinks the distinct input
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_distance)
-        .select("id_a", "id_b", "hamming")
+        cand.selectExpr("id_a", "id_b", hamming)
+        .filter(f"hamming <= {int(max_distance)}")
         .distinct()
     )
 

@@ -59,12 +59,6 @@ def override_join(dfs: list[DataFrame], key: str, value_col: str) -> DataFrame:
     )
 
 
-def broadcast_join(large: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Map-side hash join: ship the small side to every task (the
-    DistributedCache idiom made explicit)."""
-    return large.join(F.broadcast(small), on, how)
-
-
 def semi_join(df: DataFrame, keys_df: DataFrame, on) -> DataFrame:
     """EXISTS — the Bloom-filter/BloomMapFile membership idiom
     (HC/io/BloomMapFile.java:49) as a first-class join."""

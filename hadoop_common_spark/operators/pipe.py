@@ -17,7 +17,7 @@ as in the reference.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,18 +53,4 @@ def pipe_lines(
     n = len(out_cols)
     return spark.createDataFrame(
         piped.map(lambda s, n=n, sep=sep: tuple((s.split(sep) + [None] * n)[:n])), schema
-    )
-
-
-def pipe_wordcount_example(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-style wordcount with shell stages (tr | sort | uniq -c
-    would be the classic; here the map stage pipes through `cat` for
-    portability and the count is native)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    identity = pipe_lines(docs.select("text"), "cat")
-    return (
-        identity.select(F.explode(F.split(F.col("line"), r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .count()
     )

@@ -34,16 +34,6 @@ def total_order_sort(df: DataFrame, cols: list[str | Column], num_partitions: in
     return out.sortWithinPartitions(*cs)
 
 
-def secondary_sort_ranked(
-    df: DataFrame, group_cols: list[str], order_cols: list[Column | str]
-) -> DataFrame:
-    """Secondary sort, window formulation: rank within each group by the
-    secondary key. Scales to huge groups (no materialization)."""
-    ocs = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    w = Window.partitionBy(*group_cols).orderBy(*ocs)
-    return df.withColumn("rn", F.row_number().over(w))
-
-
 def secondary_sort_collected(
     df: DataFrame, group_cols: list[str], order_struct_cols: list[str]
 ) -> DataFrame:

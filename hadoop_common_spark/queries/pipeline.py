@@ -17,23 +17,29 @@ from hadoop_common_spark.operators.textstats import (
 )
 from hadoop_common_spark.queries import query
 
-_ORACLE = """
-WITH scored AS (
-  SELECT doc_id, lang, text,
-         md5(text) AS content_md5,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-                   ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tok,
-         (0.4 * (CASE WHEN n_tok2 >= 5 AND n_tok2 <= 100000 THEN 1.0 ELSE 0.0 END)
+# DuckDB renderings of textstats.token_count and textstats.quality_score,
+# shared by _ORACLE and _QUALITY_BIN_ORACLE. _QUALITY_ORACLE reads n_chars
+# and n_tok2 (token count as DOUBLE) from a subquery; tests pin both
+# against the Spark builders on adversarial text.
+_N_TOK_ORACLE = """CASE WHEN trim(text) = '' THEN 0
+                   ELSE len(string_split_regex(trim(text), '\\s+')) END"""
+_QUALITY_ORACLE = """(0.4 * (CASE WHEN n_tok2 >= 5 AND n_tok2 <= 100000 THEN 1.0 ELSE 0.0 END)
           + 0.3 * (CASE WHEN n_tok2 > 0 AND (n_chars / n_tok2) >= 2.0 AND (n_chars / n_tok2) <= 12.0
                         THEN 1.0 ELSE 0.0 END)
           + 0.3 * (CASE WHEN n_chars > 0
                         THEN CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / n_chars
-                        ELSE 0.0 END)) AS quality
+                        ELSE 0.0 END))"""
+
+_ORACLE = f"""
+WITH scored AS (
+  SELECT doc_id, lang, text,
+         md5(text) AS content_md5,
+         CAST({_N_TOK_ORACLE} AS BIGINT) AS n_tok,
+         {_QUALITY_ORACLE} AS quality
   FROM (
     SELECT doc_id, lang, text,
            CAST(length(text) AS DOUBLE) AS n_chars,
-           CAST(CASE WHEN trim(text) = '' THEN 0
-                     ELSE len(string_split_regex(trim(text), '\\s+')) END AS DOUBLE) AS n_tok2
+           CAST({_N_TOK_ORACLE} AS DOUBLE) AS n_tok2
     FROM documents
   )
 ),
@@ -334,19 +340,13 @@ def corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "pos")
 
 
-_QUALITY_BIN_ORACLE = """
+_QUALITY_BIN_ORACLE = f"""
 WITH scored AS (
   SELECT doc_id, n_chars,
-         (0.4 * (CASE WHEN n_tok2 >= 5 AND n_tok2 <= 100000 THEN 1.0 ELSE 0.0 END)
-          + 0.3 * (CASE WHEN n_tok2 > 0 AND (n_chars / n_tok2) >= 2.0 AND (n_chars / n_tok2) <= 12.0
-                        THEN 1.0 ELSE 0.0 END)
-          + 0.3 * (CASE WHEN n_chars > 0
-                        THEN CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / n_chars
-                        ELSE 0.0 END)) AS q
+         {_QUALITY_ORACLE} AS q
   FROM (
     SELECT doc_id, text, CAST(length(text) AS DOUBLE) AS n_chars,
-           CAST(CASE WHEN trim(text) = '' THEN 0
-                     ELSE len(string_split_regex(trim(text), '\\s+')) END AS DOUBLE) AS n_tok2
+           CAST({_N_TOK_ORACLE} AS DOUBLE) AS n_tok2
     FROM documents
   )
 ),

@@ -14,6 +14,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in Spark's generated-class cache (static conf
+# spark.sql.codegen.cache.maxEntries, default 100). The cache is a Guava
+# LRU split into 4 segments, so the default keeps about 25 classes per
+# segment and evicts within one perfbench mix. Measured on a 4-core VM
+# with the seed-1 perfbench inputs and noop sinks: at 100, every warm job
+# recompiled 39-41 classes for the `warehouse` mix (330-390 ms of Janino
+# compile time, before the JIT warms the fresh classes) and 19-20 for the
+# `corpus` mix (385-480 ms). At 1000 a warm job compiles nothing
+# (pinned by tests/test_driver_overhead.py).
+CODEGEN_CACHE_ENTRIES = 1000
+
 # Runtime-settable confs we want on every session, including sessions the
 # test driver hands us (where we cannot influence builder-time config).
 _RUNTIME_CONFS = {
@@ -138,6 +149,7 @@ def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | N
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Long sessions (the 195-query strict sweep, the ~130-plan bench)
         # fill the JVM's default 240 MB code cache with whole-stage-codegen
         # classes; once full, HotSpot disables the JIT and late queries run

@@ -49,16 +49,6 @@ def _decode(s: str) -> str:
     return unquote_plus(s)
 
 
-def _java_hash(s: str) -> int:
-    """Java String.hashCode() & 0x7fffffff (getHarHash)."""
-    h = 0
-    for ch in s:
-        h = (31 * h + ord(ch)) & 0xFFFFFFFF
-    if h >= 1 << 31:
-        h -= 1 << 32
-    return h & 0x7FFFFFFF
-
-
 _PROPS = _encode("0 420 spark spark")  # modtime perm owner group
 _DPROPS = _encode("0 493 spark spark")
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +58,15 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: _read_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
+def _holds_view(catalog, name: str, analyzed) -> bool:
+    """True when the session's temp view ``name`` stores exactly the
+    ``analyzed`` plan (what ``createOrReplaceTempView`` stored for it)."""
+    try:
+        return catalog.getRawTempView(name).get().plan().get().equals(analyzed)
+    except Py4JJavaError:  # no such view, or a view stored without a plan
+        return False
+
+
 def register_views(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> dict[str, DataFrame]:
@@ -66,18 +76,26 @@ def register_views(
     footer reads + py4j round trips (measured 0.6-2.0s), and the query
     wrappers call this on EVERY query — at small SFs that fixed overhead
     dominates sub-2s queries and its JVM-state variance was misread as
-    per-query drift (r6's pipeline_clean_corpus watch item). The view
-    REGISTRATION is re-applied every call (~85ms for all 10): a temp
-    view is global per session, so anything that re-pointed one of the
-    names out-of-band (a test registering its own 'documents') would
-    otherwise silently survive a memo hit and serve wrong data. Pass
-    ``force=True`` after rewriting a table's files at the same path
+    per-query drift (r6's pipeline_clean_corpus watch item). The views
+    are CHECKED every call and re-registered only where the catalog no
+    longer holds the memoized DataFrame's analyzed plan: a temp view is
+    global per session, so anything that re-pointed one of the names
+    out-of-band (a test registering its own 'documents') must not
+    survive a memo hit and serve wrong data. Re-registering all ten on
+    every query cost ~90 ms of py4j time warm; checking them costs ~5 ms.
+    Pass ``force=True`` after rewriting a table's files at the same path
     in-session (a memoized DataFrame pins its file listing at read
     time)."""
     if force or getattr(spark, "_hcs_views_sf_dir", None) != sf_dir:
-        spark._hcs_views_tables = load_tables(spark, sf_dir)
+        tables = load_tables(spark, sf_dir)
+        spark._hcs_views_tables = tables
+        spark._hcs_views_plans = {
+            name: df._jdf.queryExecution().analyzed() for name, df in tables.items()
+        }
         spark._hcs_views_sf_dir = sf_dir
     tables = spark._hcs_views_tables
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
+    catalog = spark._jsparkSession.sessionState().catalog()
+    for name, analyzed in spark._hcs_views_plans.items():
+        if not _holds_view(catalog, name, analyzed):
+            tables[name].createOrReplaceTempView(name)
     return tables

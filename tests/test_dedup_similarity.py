@@ -829,6 +829,49 @@ def test_minhash_and_simhash_bucket_caps(spark):
     assert swide == sbase
 
 
+@pytest.mark.parametrize(
+    "bad", ["band", "_keys", "h0", "H15", "_one", "_shset", "band_key", "sh_b", "doc`id"]
+)
+def test_minhash_lsh_pairs_rejects_colliding_id_col(spark, bad):
+    """id_col is spliced into parsed SQL next to the builder's own
+    aliases; a colliding name must fail fast with ValueError, not with
+    [AMBIGUOUS_REFERENCE] deep in analysis."""
+    docs = _docs(spark).withColumnRenamed("doc_id", bad)
+    with pytest.raises(ValueError, match="collides with internal aliases"):
+        minhash_lsh_pairs(docs, bad, "text", threshold=0.3)
+
+
+@pytest.mark.parametrize("bad", ["chunk", "_fp", "chunk_val", "_c", "id_a", "_fb", "doc`id"])
+def test_simhash_pairs_rejects_colliding_id_col(spark, bad):
+    fps = simhash(_docs(spark), "doc_id", "text").withColumnRenamed("doc_id", bad)
+    with pytest.raises(ValueError, match="collides with internal aliases"):
+        simhash_pairs(fps, bad, max_distance=3)
+
+
+def test_pair_builders_quote_unusual_id_col(spark):
+    """A legal but unusual id name (a space, upper case) is quoted, not
+    rejected, and pairs exactly like doc_id."""
+    docs = _docs(spark)
+    odd = docs.withColumnRenamed("doc_id", "Doc Id")
+    want = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.3).collect()
+    }
+    got = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in minhash_lsh_pairs(odd, "Doc Id", "text", threshold=0.3).collect()
+    }
+    assert got == want and want
+    fps = simhash(docs, "doc_id", "text")
+    want = set(simhash_pairs(fps, "doc_id", max_distance=3).collect())
+    got = set(
+        simhash_pairs(
+            fps.withColumnRenamed("doc_id", "Doc Id"), "Doc Id", max_distance=3
+        ).collect()
+    )
+    assert got == want and want
+
+
 def test_containment_pairs_asymmetric(spark):
     """Containment finds the excerpt Jaccard misses: a short doc whose
     every shingle appears in a long doc scores cont_short = 1.0 even
