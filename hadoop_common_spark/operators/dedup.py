@@ -31,6 +31,13 @@ asks for, built Spark-first:
   clearer form where a builder runs once or off the query path. Parsed
   SQL splices ``id_col`` next to the builder's own aliases, so a builder
   rejects an ``id_col`` that collides with them (``_guard_id_col``).
+- Join strategy: a self-join over a corpus-sized EXPLODED table with
+  wide keys (word shingles, positional character grams, fingerprint
+  chunks) is pinned to sort-merge through :func:`_merge_self_join`; a
+  self-join over narrow fixed-width band keys (the MinHash band join
+  here, the sign-LSH embedding bands in ``queries/similarity.py``) is
+  left to the planner, whose hash build wins there. The measurements
+  behind both directions are in :func:`_merge_self_join`'s docstring.
 """
 
 from __future__ import annotations
@@ -132,6 +139,37 @@ def _guard_id_col(fn: str, id_col: str, internal: set[str]) -> None:
     would otherwise surface deep in analysis as [AMBIGUOUS_REFERENCE]."""
     if "`" in id_col or id_col.lower() in internal:
         raise ValueError(f"{fn}: id_col {id_col!r} collides with internal aliases")
+
+
+def _merge_self_join(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
+    """Equi-join two projections ``a`` (``id_a``) and ``b`` (``id_b``) of
+    one exploded table on ``keys``, keep ``id_a < id_b``, and pin the
+    join to sort-merge (``hint("merge")``).
+
+    Why the hint: Catalyst sizes a Generate's output from the
+    UN-exploded input, so the planner estimates a corpus-sized table of
+    shingles, positional grams or fingerprint chunks from the small
+    doc-level scan or checkpointed sketch and BROADCASTS one whole side —
+    a hash-relation build of every gram in the corpus, and a plan shape
+    that cannot exist at 100 TB (the build side only "fits" while the
+    estimator is wrong). AQE still coalesces and skew-splits the
+    exchanges of the pinned join. Fresh-JVM A/B, broadcast → sort-merge
+    (OPTIMIZATION_r13.md, sparse-join family):
+
+    - positional grams (``shared_span_pairs``), sf0.1 warm:
+      3.5-4.4 s → 1.9-2.5 s;
+    - (block, shingle) (``ngram_jaccard_pairs``) at the 10× tier:
+      [23.5, 11.1, 10.1] → [12.2, 5.5, 4.5] s; ``containment_pairs``:
+      [13.0, 9.2, 8.0] → [5.5, 4.7, 4.5] s; sf0.1 unchanged;
+    - fingerprint chunks (``simhash_pairs``) at the 100× tier:
+      [45.8, 34.2] → [21.7, 16.3] s, a tie at sf0.1 and 10×.
+
+    The same hint measured WORSE on narrow fixed-width band keys, whose
+    rows hash far cheaper than they sort, so those joins keep the
+    planner: the MinHash band join 2× ([7.1, 4.5, 4.3] → [20.1, 10.5,
+    9.5] s at 10×) and the sign-LSH embedding band join 1.6× ([12.0,
+    5.0, 5.0] → [19.6, 8.3, 7.4] s at 10×)."""
+    return a.join(b.hint("merge"), keys).filter("id_a < id_b")
 
 
 def _md5_int_sql(expr: str, hexdigits: int) -> str:
@@ -238,7 +276,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → signature → band
     buckets → candidate pairs → exact Jaccard verify ≥ threshold.
@@ -284,71 +321,45 @@ def minhash_lsh_pairs(
         *[F.expr(f"min({minhash_j_sql('_base', j)}) AS h{j}") for j in range(num_hashes)],
         F.expr("collect_set(_one) AS _shset"),
     ).localCheckpoint(eager=False)
-    if max_bucket_size is None:
-        # FIRST-MATCH-BAND candidate dedup (same trick as simhash_pairs):
-        # each bk row carries the doc's FULL band-key vector, and a pair
-        # is emitted only from its lowest agreeing band — a map-side
-        # filter instead of a .distinct() shuffle over the candidate
-        # multiset (near-identical docs agree on ALL bands, so that
-        # multiset is ~bands x the unique pairs at high dup density; the
-        # r5 100x study measured it at 2.2B rows). Band keys are STRUCTS
-        # of the band's raw minhash values (not md5-of-concat strings):
-        # grouping is identical (both injective on the band vector), the
-        # carried vector is bands × rows longs instead of bands × 32-char
-        # strings, and 4 md5 calls per doc disappear. The capped path
-        # keeps lsh_band_keys' md5 form — occupancy semantics there are
-        # part of the oracle contract.
-        keys = ", ".join(
-            "named_struct("
-            + ", ".join(f"'k{r}', h{b * rows + r}" for r in range(rows))
-            + ")"
-            for b in range(bands)
-        )
-        bk = sig.selectExpr(i, f"array({keys}) AS _keys").selectExpr(
-            i, "_keys", "posexplode(_keys) AS (band, band_key)"
-        )
-        a = bk.selectExpr(f"{i} AS id_a", "_keys AS _ka", "band", "band_key")
-        b = bk.selectExpr(f"{i} AS id_b", "_keys AS _kb", "band", "band_key")
-        first_eq = "coalesce(" + ", ".join(
-            f"CASE WHEN element_at(_ka, {j + 1}) = element_at(_kb, {j + 1}) THEN {j} END"
-            for j in range(bands)
-        ) + ")"
-        cand = (
-            # NO merge hint here, unlike the shingle/chunk self-joins: the
-            # r13 A/B measured the SMJ form 2x WORSE at the 10x tier
-            # (20.1/10.5/9.5s vs 7.1/4.5/4.3s) — sorting struct band keys
-            # while carrying both full key vectors costs far more than the
-            # hash build saves. The broadcast-side volume is bands rows
-            # per doc of fixed-width longs, the one estimator blind spot
-            # in this family whose hash build actually wins.
-            a.join(b, ["band", "band_key"])
-            .filter("id_a < id_b")
-            .filter(f"{first_eq} = band")
-            .select("id_a", "id_b")
-        )
-    else:
-        bk = lsh_band_keys(sig, id_col, bands, rows)
-        # occupancy guard (skew.capped_self_join_pairs rationale): a
-        # degenerate band bucket fans out occ²/2 pairs; capped buckets
-        # drop out of candidate generation, their members still pair
-        # through other bands. First-match dedup is NOT valid here (a
-        # capped bucket can be the lowest agreeing band), so the
-        # distinct stays.
-        ok = (
-            bk.groupBy("band", "band_key")
-            .agg(F.expr("count(1) AS _occ"))
-            .filter(f"_occ <= {int(max_bucket_size)}")
-            .select("band", "band_key")
-        )
-        bk = bk.join(ok, ["band", "band_key"])
-        a = bk.selectExpr(f"{i} AS id_a", "band", "band_key")
-        b = bk.selectExpr(f"{i} AS id_b", "band", "band_key")
-        cand = (
-            a.join(b, ["band", "band_key"])
-            .filter("id_a < id_b")
-            .select("id_a", "id_b")
-            .distinct()
-        )
+    # FIRST-MATCH-BAND candidate dedup (same trick as simhash_pairs):
+    # each bk row carries the doc's FULL band-key vector, and a pair is
+    # emitted only from its lowest agreeing band — a map-side filter
+    # instead of a .distinct() shuffle over the candidate multiset
+    # (near-identical docs agree on ALL bands, so that multiset is
+    # ~bands x the unique pairs at high dup density; the r5 100x study
+    # measured it at 2.2B rows). Band keys are STRUCTS of the band's raw
+    # minhash values (not lsh_band_keys' md5-of-concat strings):
+    # grouping is identical (both injective on the band vector), the
+    # carried vector is bands × rows longs instead of bands × 32-char
+    # strings, and 4 md5 calls per doc disappear.
+    keys = ", ".join(
+        "named_struct("
+        + ", ".join(f"'k{r}', h{b * rows + r}" for r in range(rows))
+        + ")"
+        for b in range(bands)
+    )
+    bk = sig.selectExpr(i, f"array({keys}) AS _keys").selectExpr(
+        i, "_keys", "posexplode(_keys) AS (band, band_key)"
+    )
+    a = bk.selectExpr(f"{i} AS id_a", "_keys AS _ka", "band", "band_key")
+    b = bk.selectExpr(f"{i} AS id_b", "_keys AS _kb", "band", "band_key")
+    first_eq = "coalesce(" + ", ".join(
+        f"CASE WHEN element_at(_ka, {j + 1}) = element_at(_kb, {j + 1}) THEN {j} END"
+        for j in range(bands)
+    ) + ")"
+    cand = (
+        # NO merge hint here, unlike the shingle/chunk self-joins: the
+        # r13 A/B measured the SMJ form 2x WORSE at the 10x tier
+        # (20.1/10.5/9.5s vs 7.1/4.5/4.3s) — sorting struct band keys
+        # while carrying both full key vectors costs far more than the
+        # hash build saves. The broadcast-side volume is bands rows per
+        # doc of fixed-width longs, the one estimator blind spot in this
+        # family whose hash build actually wins.
+        a.join(b, ["band", "band_key"])
+        .filter("id_a < id_b")
+        .filter(f"{first_eq} = band")
+        .select("id_a", "id_b")
+    )
     sa = sig.selectExpr(f"{i} AS id_a", "_shset AS sh_a")
     sb = sig.selectExpr(f"{i} AS id_b", "_shset AS sh_b")
     inter = "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
@@ -418,7 +429,6 @@ def simhash_pairs(
     sim_col: str = "simhash",
     bits: int = 60,
     max_distance: int = 3,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Banded Hamming-distance join over SimHash fingerprints — the
     pairing step that completes SimHash dedup end-to-end (cheap-sketch
@@ -466,56 +476,76 @@ def simhash_pairs(
     ck = fp.selectExpr(i, "_fp", f"explode(array({chunk_structs})) AS _c").selectExpr(
         i, "_fp", "_c.chunk AS chunk", "_c.chunk_val AS chunk_val"
     )
-    if max_bucket_size is not None:
-        # occupancy guard, same rationale as skew.capped_self_join_pairs:
-        # an exploded chunk bucket (mass-identical fingerprints) fans out
-        # occ²/2; capped buckets drop out, members still pair via other
-        # chunks when genuinely close
-        ok = (
-            ck.groupBy("chunk", "chunk_val")
-            .agg(F.expr("count(1) AS _occ"))
-            .filter(f"_occ <= {int(max_bucket_size)}")
-            .select("chunk", "chunk_val")
-        )
-        ck = ck.join(ok, ["chunk", "chunk_val"])
     a = ck.selectExpr(f"{i} AS id_a", "_fp AS _fa", "chunk", "chunk_val")
     b = ck.selectExpr(f"{i} AS id_b", "_fp AS _fb", "chunk", "chunk_val")
-    hamming = "CAST(bit_count(_fa ^ _fb) AS BIGINT) AS hamming"
-    # merge hint (r13): the chunk table is corpus-sized (chunks rows per
-    # document), but the planner estimates it from the tiny checkpointed
-    # (id, fp) sketch and BROADCASTS one whole side — a hash-relation
-    # build of every (chunk, value) in the corpus. Fresh-JVM A/B at the
-    # 100x tier: BHJ 45.8/34.2s vs SMJ 21.7/16.3s (2x), tie at sf0.1/10x
-    # — and the broadcast shape cannot exist at 100 TB anyway (the build
-    # side only "fits" while the estimator is wrong, exactly the
-    # shared_span_pairs artifact).
-    cand = a.join(b.hint("merge"), ["chunk", "chunk_val"]).filter("id_a < id_b")
-    if max_bucket_size is None:
-        # FIRST-MATCH-BAND dedup (the classic LSH trick): a qualifying
-        # pair shares >=1 chunk, so emit it ONLY from its lowest-index
-        # agreeing chunk — a map-side filter that replaces the
-        # .distinct() shuffle over the whole candidate volume (at
-        # near-dup density every true pair agrees on ALL chunks, so the
-        # distinct input was ~(d+1)x the output). NOT valid under
-        # max_bucket_size: a capped-away bucket can be the lowest
-        # agreeing chunk while the pair legitimately survives through a
-        # later band — there the distinct stays.
-        first_eq = "coalesce(" + ", ".join(
-            f"CASE WHEN shiftright(_fa ^ _fb, {j * width}) & {mask} = 0 THEN {j} END"
-            for j in range(chunks)
-        ) + ")"
-        return (
-            cand.filter(f"{first_eq} = chunk")
-            .selectExpr("id_a", "id_b", hamming)
-            .filter(f"hamming <= {int(max_distance)}")
-        )
+    # FIRST-MATCH-BAND dedup (the classic LSH trick): a qualifying pair
+    # shares >=1 chunk, so emit it ONLY from its lowest-index agreeing
+    # chunk — a map-side filter that replaces the .distinct() shuffle
+    # over the whole candidate volume (at near-dup density every true
+    # pair agrees on ALL chunks, so the distinct input was ~(d+1)x the
+    # output).
+    first_eq = "coalesce(" + ", ".join(
+        f"CASE WHEN shiftright(_fa ^ _fb, {j * width}) & {mask} = 0 THEN {j} END"
+        for j in range(chunks)
+    ) + ")"
     return (
-        # verify BEFORE the dedup shuffle: popcount is a few instructions,
-        # and pruning failed candidates early shrinks the distinct input
-        cand.selectExpr("id_a", "id_b", hamming)
+        _merge_self_join(a, b, ["chunk", "chunk_val"])
+        .filter(f"{first_eq} = chunk")
+        .selectExpr("id_a", "id_b", "CAST(bit_count(_fa ^ _fb) AS BIGINT) AS hamming")
         .filter(f"hamming <= {int(max_distance)}")
-        .distinct()
     )
+
+
+def _shingle_overlap(
+    df: DataFrame, id_col: str, text_col: str, block_col: str, shingle_n: int, fn: str
+) -> DataFrame:
+    """The sparse similarity join :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs` score: every pair of documents in one block
+    that shares >=1 distinct word shingle, as ``(id_a, id_b, _inter, _na,
+    _nb)`` with ``id_a < id_b``, ``_inter`` the shared-shingle count and
+    ``_na``/``_nb`` the two distinct-shingle set sizes.
+
+    Explode distinct shingles, self-join on (block, shingle) and count
+    the matches per pair: only pairs sharing a shingle ever materialize,
+    so this equals the all-pairs formulation for any score threshold > 0
+    — and it scales where the all-pairs cross join does not (|block|²/2
+    array intersections, measured 8× slower at sf0.1 and quadratic at
+    100 TB): each shingle shuffles once and fans out only where
+    documents actually overlap. A shingle shared by d documents fans out
+    d²/2 rows — hot grams are this join's skew.
+
+    The doc-level shingle arrays are materialized ONCE
+    (``localCheckpoint``): the shingling pass would otherwise run 3×
+    (two join sides + the sizes branch), and set sizes become a
+    zero-shuffle ``size`` map instead of a groupBy over exploded rows.
+    On a cluster this is the temp sketch table you'd write to storage
+    between the two stages. Zero-shingle documents (fewer than
+    ``shingle_n`` tokens) are dropped before the checkpoint: they explode
+    to no rows, so they could never pair anyway. ``id_col`` must not
+    collide with the internal aliases ``_blk``/``_shs``/``_sh``/``_n``
+    that sit beside it (``ValueError``)."""
+    _guard_id_col(fn, id_col, {"_blk", "_shs", "_sh", "_n"})
+    docsh = (
+        df.select(
+            F.col(block_col).alias("_blk"),
+            F.col(id_col),
+            word_shingles(text_col, shingle_n).alias("_shs"),
+        )
+        .filter(F.size("_shs") > 0)
+        .localCheckpoint(eager=False)
+    )
+    sh = docsh.select("_blk", id_col, F.explode("_shs").alias("_sh"))
+    sizes = docsh.select(F.col(id_col), F.size("_shs").alias("_n"))
+    a = sh.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
+    b = sh.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
+    inter = (
+        _merge_self_join(a, b, ["_blk", "_sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("_inter"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -525,108 +555,16 @@ def ngram_jaccard_pairs(
     block_col: str,
     shingle_n: int = 3,
     threshold: float = 0.1,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """N-gram Jaccard pairs within a blocking column (lang, source,
-    length band...), as a **sparse similarity join**: explode distinct
-    shingles, self-join on (block, shingle) to count the intersection per
-    pair, then derive Jaccard from the per-document set sizes.
-
-    Only pairs sharing ≥1 shingle ever materialize — equivalent to the
-    all-pairs formulation for any threshold > 0, and the reason this
-    scales: the all-pairs cross join computes |block|²/2 array
-    intersections (measured 8× slower at sf0.1 and quadratic-blowup-dead
-    at 100 TB), while this shuffles each shingle once and fans out only
-    where documents actually overlap.
-
-    Hot shingles (stopword grams) are the skew knob: a gram shared by
-    d documents fans out d²/2 rows in the self-join. ``max_shingle_df``
-    implements the frequency cap: grams whose per-block document
-    frequency exceeds it are excluded from CANDIDATE DISCOVERY only —
-    surviving pairs are then re-verified with an exact array
-    intersection over the FULL shingle sets, so every emitted jaccard is
-    exact; the only loss is pairs whose shared shingles are ALL hot
-    (high union, hot-only overlap — far below any practical threshold).
-    Join fan-out becomes bounded by max_shingle_df²/2 per gram
-    regardless of corpus size. None (default) = exact single-pass form."""
-    # Doc-level shingle arrays materialized ONCE (localCheckpoint): the
-    # shingling pass would otherwise run 3× (two join sides + the sizes
-    # branch), and set sizes become a zero-shuffle F.size map instead of
-    # a groupBy over exploded rows. On a cluster this is the temp sketch
-    # table you'd write to storage between the two stages.
-    docsh = df.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col),
-        word_shingles(text_col, shingle_n).alias("_shs"),
-    ).localCheckpoint(eager=False)
-    sh = docsh.select("_blk", id_col, F.explode("_shs").alias("_sh"))
-
-    if max_shingle_df is not None:
-        # candidate discovery over COLD shingles only (one extra agg on
-        # the exploded frame — map-side combined, same shuffle key)
-        # Per-shingle df as a WINDOW count, not a groupBy + join-back:
-        # the join form re-shuffles the exploded shingle table per join
-        # side AND leaves the corpus-sized "cold" relation to the
-        # broadcast planner (AQE broadcasting it blew
-        # spark.driver.maxResultSize at the 100x replica tier). The
-        # window shuffles shingles ONCE on (blk, shingle) — exactly the
-        # partitioning the a/b self-join consumes — and sh has one row
-        # per (doc, distinct shingle), so a plain count IS the df.
-        from pyspark.sql import Window as _W
-
-        sh_cold = (
-            sh.withColumn(
-                "_df", F.count(F.lit(1)).over(_W.partitionBy("_blk", "_sh"))
-            )
-            .filter(F.col("_df") <= max_shingle_df)
-            .drop("_df")
-        )
-        a = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-        b = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-        # merge hint (r13): see the uncapped site below — same
-        # corpus-sized exploded build side, same estimator blind spot
-        cand = (
-            a.join(b.hint("merge"), ["_blk", "_sh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        # exact verify over the full sets: capped discovery, uncapped score
-        xa = docsh.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
-        xb = docsh.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
-        inter_sz = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-        union_sz = (F.size("_sa") + F.size("_sb")).cast("double") - inter_sz
-        return (
-            cand.join(xa, "id_a")
-            .join(xb, "id_b")
-            .withColumn("jaccard", inter_sz / union_sz)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    sizes = docsh.select(F.col(id_col), F.size("_shs").alias("_n"))
-    a = sh.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-    b = sh.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-    # merge hint (r13): the exploded (block, shingle) table is
-    # corpus-sized, but the planner sizes it from the checkpointed
-    # doc-level sketch and BROADCASTS one whole side (plan evidence
-    # plans/r12: BroadcastHashJoin over both shingle sides). The SMJ is
-    # the only shape that exists at 100 TB and measured at-or-better at
-    # every bench tier (see OPTIMIZATION_r13.md, sparse-join family).
-    inter = (
-        a.join(b.hint("merge"), ["_blk", "_sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
+    length band...): ``|A∩B| / |A∪B|`` over distinct shingle sets, for
+    every pair the sparse :func:`_shingle_overlap` join finds; emits
+    (id_a, id_b, jaccard) with jaccard >= threshold."""
     jac = F.col("_inter").cast("double") / (
         (F.col("_na") + F.col("_nb")).cast("double") - F.col("_inter").cast("double")
     )
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, id_col, text_col, block_col, shingle_n, "ngram_jaccard_pairs")
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -640,7 +578,6 @@ def containment_pairs(
     block_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment pairs within a blocking column: for every
     pair sharing >=1 shingle, ``cont_a = |A∩B| / |A|`` and ``cont_b =
@@ -651,91 +588,14 @@ def containment_pairs(
     subset-duplication class LLM corpora need stripped (syndicated
     snippets, quoted posts, boilerplate-wrapped articles).
 
-    Same sparse-similarity-join scaling argument as
-    :func:`ngram_jaccard_pairs`: any pair with containment > 0 shares a
+    Same sparse join as :func:`ngram_jaccard_pairs`
+    (:func:`_shingle_overlap`): any pair with containment > 0 shares a
     shingle, so the (block, shingle) equi-join is a LOSSLESS blocking —
-    no all-pairs scan at any corpus size. ``max_shingle_df`` is the
-    skew/volume knob (MANDATORY at heavy near-dup density — the 100×
-    replica study OOMed the uncapped form exactly like the banded joins
-    before their occupancy caps): shingles in more than N docs per block
-    are excluded from candidate DISCOVERY only; surviving pairs are
-    re-verified with exact full-set intersections, so every emitted
-    containment is exact — only pairs whose shared shingles are ALL hot
-    are lost. None (default) keeps the exact single-pass oracle
-    semantics. Zero-shingle docs can never reach the threshold and are
-    excluded on BOTH engines.
+    no all-pairs scan at any corpus size. Zero-shingle docs can never
+    reach the threshold and are excluded on BOTH engines.
     """
-    docsh = (
-        df.select(
-            F.col(block_col).alias("_blk"),
-            F.col(id_col),
-            word_shingles(text_col, shingle_n).alias("_shs"),
-        )
-        .filter(F.size("_shs") > 0)
-        .localCheckpoint(eager=False)
-    )
-    sh = docsh.select("_blk", id_col, F.explode("_shs").alias("_sh"))
-
-    if max_shingle_df is not None:
-        # Per-shingle df as a WINDOW count, not a groupBy + join-back:
-        # the join form re-shuffles the exploded shingle table per join
-        # side AND leaves the corpus-sized "cold" relation to the
-        # broadcast planner (AQE broadcasting it blew
-        # spark.driver.maxResultSize at the 100x replica tier). The
-        # window shuffles shingles ONCE on (blk, shingle) — exactly the
-        # partitioning the a/b self-join consumes — and sh has one row
-        # per (doc, distinct shingle), so a plain count IS the df.
-        from pyspark.sql import Window as _W
-
-        sh_cold = (
-            sh.withColumn(
-                "_df", F.count(F.lit(1)).over(_W.partitionBy("_blk", "_sh"))
-            )
-            .filter(F.col("_df") <= max_shingle_df)
-            .drop("_df")
-        )
-        a = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-        b = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-        # merge hint (r13): see the uncapped site below — same
-        # corpus-sized exploded build side, same estimator blind spot
-        cand = (
-            a.join(b.hint("merge"), ["_blk", "_sh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        xa = docsh.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
-        xb = docsh.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
-        inter_sz = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-        return (
-            cand.join(xa, "id_a")
-            .join(xb, "id_b")
-            .withColumn("cont_a", inter_sz / F.size("_sa").cast("double"))
-            .withColumn("cont_b", inter_sz / F.size("_sb").cast("double"))
-            .filter(F.greatest("cont_a", "cont_b") >= threshold)
-            .select("id_a", "id_b", "cont_a", "cont_b")
-        )
-
-    sizes = docsh.select(F.col(id_col), F.size("_shs").alias("_n"))
-    a = sh.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-    b = sh.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-    # merge hint (r13): the exploded (block, shingle) table is
-    # corpus-sized, but the planner sizes it from the checkpointed
-    # doc-level sketch and BROADCASTS one whole side (plan evidence
-    # plans/r12: BroadcastHashJoin over both shingle sides). The SMJ is
-    # the only shape that exists at 100 TB and measured at-or-better at
-    # every bench tier (see OPTIMIZATION_r13.md, sparse-join family).
-    inter = (
-        a.join(b.hint("merge"), ["_blk", "_sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, id_col, text_col, block_col, shingle_n, "containment_pairs")
         .withColumn("cont_a", F.col("_inter").cast("double") / F.col("_na").cast("double"))
         .withColumn("cont_b", F.col("_inter").cast("double") / F.col("_nb").cast("double"))
         .filter(F.greatest("cont_a", "cont_b") >= threshold)
@@ -774,7 +634,12 @@ def shared_span_pairs(
     gram split conservatively; candidate fan-out becomes bounded by
     max_gram_df²/2 per gram). The run detection is one window over
     (pair, diag) — partition cardinality is pairs×diagonals, never
-    corpus-sized."""
+    corpus-sized. ``id_col`` must not collide with the internal aliases
+    ``_blk``/``_i``/``_g``/``_dr``/``_df``/``_ps``/``_pc`` that sit beside
+    it (``ValueError``)."""
+    _guard_id_col(
+        "shared_span_pairs", id_col, {"_blk", "_i", "_g", "_dr", "_df", "_ps", "_pc"}
+    )
     # repartition BEFORE the per-char gram fan-out: a small corpus scans
     # as one split and would run the (text_len × k)-byte explode on one
     # core (measured 3s single-threaded vs 0.3s spread at sf0.1); at
@@ -919,21 +784,7 @@ def shared_span_pairs(
         b = pg.select(
             "_blk", F.col(id_col).alias("id_b"), F.col("_i").alias("_ib"), "_g"
         )
-        # merge hint: the planner's size estimate for an exploded gram
-        # table is garbage (it tracks the un-exploded scan), so at bench
-        # scale it BROADCASTS one whole positional-gram side — a
-        # hash-relation build of every character position in the corpus,
-        # measured 3.5-4.4s warm vs 1.9-2.5s for the SMJ form at sf0.1
-        # (r13 fresh-JVM A/B), and a plan shape that cannot exist at
-        # 100 TB (the build side is corpus-sized — it only "fits" while
-        # the estimator is wrong). The hint pins the shuffle join the
-        # right scale plan uses everywhere; AQE still coalesces/skew-
-        # splits its exchanges.
-        m = (
-            a.join(b.hint("merge"), ["_blk", "_g"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "_ia", "_ib")
-        )
+        m = _merge_self_join(a, b, ["_blk", "_g"]).select("id_a", "id_b", "_ia", "_ib")
     from pyspark.sql import Window
 
     diag = (F.col("_ia") - F.col("_ib")).alias("_diag")

@@ -126,58 +126,6 @@ def salted_join(
     return lt.join(rt, on + [salt_col], how).drop(salt_col)
 
 
-def capped_self_join_pairs(
-    df: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    max_bucket_size: int | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Self-join pair generation over bucket keys with an OCCUPANCY CAP —
-    the guard the banded-LSH candidate joins need at pathological
-    near-dup density.
-
-    A bucket holding d rows fans out d²/2 pairs; one degenerate key
-    (boilerplate cluster, mass-replicated spam, a constant-ish band
-    projection) turns the join quadratic no matter how good the banding
-    is. Measured: at 100× replica density the uncapped embedding-cosine
-    candidate join left 3 straggler tasks grinding a hot bucket for
-    20+ minutes before being killed — a cap of a few thousand bounds
-    every task at cap²/2 pairs regardless of corpus size.
-
-    Buckets with more than ``max_bucket_size`` rows are EXCLUDED from
-    pair generation (the standard production trade: a bucket that hot is
-    a degenerate cluster — route it to exact dedup / boilerplate
-    handling rather than pairwise verification; its members still pair
-    through their OTHER bands in a banded scheme). ``None`` keeps exact
-    semantics. One extra count aggregate on the same shuffle key —
-    map-side combined, no new shuffle shape."""
-    keyed = df.select(*key_cols, F.col(id_col))
-    if max_bucket_size is not None:
-        ok = (
-            keyed.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") <= max_bucket_size)
-            .select(*key_cols)
-        )
-        keyed = keyed.join(ok, key_cols)
-    a = keyed.select(*key_cols, F.col(id_col).alias(id_a))
-    b = keyed.select(*key_cols, F.col(id_col).alias(id_b))
-    return (
-        # NO merge hint (r13 A/B): pinning SMJ here measured ~1.6x WORSE
-        # for the banded embedding join at the 10x tier (19.6/8.3/7.4s
-        # vs 12.0/5.0/5.0s broadcast) — like the MinHash band join, the
-        # narrow fixed-width band-key rows hash far cheaper than they
-        # sort. The dedup shingle/chunk/gram self-joins are the family
-        # where SMJ wins (operators/dedup.py r13 notes).
-        a.join(b, key_cols)
-        .filter(F.col(id_a) < F.col(id_b))
-        .select(id_a, id_b)
-        .distinct()
-    )
-
-
 def segmented_running_sum(
     df: DataFrame,
     key_cols: list[str],

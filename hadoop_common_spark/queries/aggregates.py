@@ -170,8 +170,8 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the within-order self-join is keyed on l_orderkey and its
     fan-out is bounded by basket size squared (TPC-H baskets are <= 7
     lineitems — ~21 pairs/order however big the table; a pathological
-    mega-basket would need the capped_self_join_pairs guard, noted in
-    the operator); item and pair supports are map-side-combined BIGINT
+    mega-basket would need an occupancy cap on the order key, which no
+    TPC-H basket needs); item and pair supports are map-side-combined BIGINT
     aggregations; the two item joins are hash joins keyed on the part;
     N attaches as a broadcast one-row scalar (whitelisted shape);
     top-100 is TakeOrderedAndProject."""

@@ -163,15 +163,21 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sketch tables, operators/dedup.py:325)
         .localCheckpoint(eager=False)
     )
-    # candidate generation through the occupancy-capped self-join helper;
-    # cap=None here keeps the oracle's exact semantics — at production
-    # density pass max_bucket_size (operators/skew.capped_self_join_pairs:
-    # one hot bucket otherwise turns this join quadratic, measured as
-    # 20-min straggler tasks at 100x replica density)
-    from hadoop_common_spark.operators.skew import capped_self_join_pairs
-
-    cand = capped_self_join_pairs(
-        banded, ["label", "bk"], "vec_id", max_bucket_size=None
+    # candidate generation: self-join on (label, band key), deduplicated
+    # across bands. NO merge hint (r13 A/B): pinning SMJ here measured
+    # ~1.6x WORSE at the 10x tier (19.6/8.3/7.4s vs 12.0/5.0/5.0s
+    # broadcast) — like the MinHash band join, the narrow fixed-width
+    # band-key rows hash far cheaper than they sort (operators/dedup.py
+    # module note, join strategy). A hot bucket fans out occupancy²/2
+    # pairs (20-min straggler tasks at 100x replica density), a density
+    # no bench tier runs.
+    a = banded.select("label", "bk", F.col("vec_id").alias("id_a"))
+    b = banded.select("label", "bk", F.col("vec_id").alias("id_b"))
+    cand = (
+        a.join(b, ["label", "bk"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
     )
     # Verify: cosine_verify_pairs picks the DistributedCache broadcast
     # kernel while the vector table is side-data sized (Arrow moves

@@ -719,6 +719,29 @@ def test_cosine_verify_pairs_both_paths_agree(spark):
     assert not any(30 in (a, b) for a, b, _ in got_bc)
 
 
+def test_embedding_cosine_pairs_match_oracle(spark, sf_dir):
+    """dedup_embedding_cosine's candidate self-join on (label, band key)
+    emits each pair once however many bands it collides in, and every
+    candidate with cosine >= 0.35 survives verify: the query equals its
+    DuckDB oracle (SELECT DISTINCT over the same bands) row for row."""
+    import duckdb
+
+    from hadoop_common_spark.queries import load_all
+    from hadoop_common_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    q = load_all()["dedup_embedding_cosine"]
+    got = sorted((r.id_a, r.id_b, r.cos) for r in q.fn(spark, sf_dir).collect())
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE VIEW embeddings AS "
+            f"SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
+        )
+        want = sorted(con.execute(f"SELECT id_a, id_b, cos FROM ({q.oracle})").fetchall())
+    assert got and len(set((a, b) for a, b, _ in got)) == len(got)
+    assert got == want
+
+
 def test_blocked_cc_equals_generic_cc(spark):
     """connected_components_blocked must agree exactly with the iterative
     connected_components on any block-partitioned edge set (its
@@ -752,83 +775,6 @@ def test_blocked_cc_equals_generic_cc(spark):
     assert (20, 20) in blocked and (21, 20) in blocked
 
 
-def test_ngram_jaccard_hot_shingle_cap(spark):
-    """max_shingle_df: capped discovery, uncapped (exact) scores. A gram
-    shared by every doc is excluded from candidate generation, so a pair
-    whose ONLY overlap is the hot gram disappears — but genuine near-dups
-    still surface through their cold shared shingles, with jaccard
-    computed over the FULL sets, identical to the uncapped value."""
-    hot = "the end of line"  # 4 words -> two 3-gram shingles, in every doc
-    df = spark.createDataFrame(
-        [
-            (0, "alpha beta gamma delta epsilon " + hot),
-            (1, "alpha beta gamma delta zeta " + hot),   # near-dup of 0
-            (2, "one two three four five " + hot),        # hot-only overlap
-        ],
-        ["doc_id", "text"],
-    ).withColumn("blk", F.lit("all"))
-
-    uncapped = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", "blk", threshold=0.01).collect()
-    }
-    capped = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", "blk", threshold=0.01, max_shingle_df=2
-        ).collect()
-    }
-    # near-dup pair survives the cap with the EXACT uncapped score
-    assert (0, 1) in capped and capped[(0, 1)] == uncapped[(0, 1)]
-    # hot-only pairs existed uncapped but drop out of capped discovery
-    assert (0, 2) in uncapped and (0, 2) not in capped
-    # a cap no gram exceeds reproduces the uncapped result exactly
-    wide = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", "blk", threshold=0.01, max_shingle_df=10**6
-        ).collect()
-    }
-    assert wide == uncapped
-
-
-def test_minhash_and_simhash_bucket_caps(spark):
-    """max_bucket_size on the minhash band join and the simhash chunk
-    join: default None is untouched; a capped degenerate bucket drops
-    out while genuine near-dups keep pairing through their other
-    bands/chunks."""
-    docs = _docs(spark)
-    base = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.3).collect()
-    }
-    wide = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.3, max_bucket_size=1000
-        ).collect()
-    }
-    assert wide == base  # cap above every occupancy == uncapped
-    # cap of 1 excludes every shared band bucket -> no candidates at all
-    none = minhash_lsh_pairs(
-        docs, "doc_id", "text", threshold=0.3, max_bucket_size=1
-    ).count()
-    assert none == 0
-
-    fps = simhash(docs, "doc_id", "text")
-    sbase = {
-        (r.id_a, r.id_b)
-        for r in simhash_pairs(fps, "doc_id", max_distance=3).collect()
-    }
-    swide = {
-        (r.id_a, r.id_b)
-        for r in simhash_pairs(
-            fps, "doc_id", max_distance=3, max_bucket_size=1000
-        ).collect()
-    }
-    assert swide == sbase
-
-
 @pytest.mark.parametrize(
     "bad", ["band", "_keys", "h0", "H15", "_one", "_shset", "band_key", "sh_b", "doc`id"]
 )
@@ -846,6 +792,32 @@ def test_simhash_pairs_rejects_colliding_id_col(spark, bad):
     fps = simhash(_docs(spark), "doc_id", "text").withColumnRenamed("doc_id", bad)
     with pytest.raises(ValueError, match="collides with internal aliases"):
         simhash_pairs(fps, bad, max_distance=3)
+
+
+@pytest.mark.parametrize("bad", ["_sh", "_n", "_blk", "_SHS", "doc`id"])
+def test_ngram_jaccard_pairs_rejects_colliding_id_col(spark, bad):
+    docs = _docs(spark).withColumn("blk", F.lit("all")).withColumnRenamed("doc_id", bad)
+    with pytest.raises(ValueError, match="collides with internal aliases"):
+        ngram_jaccard_pairs(docs, bad, "text", "blk", threshold=0.3)
+
+
+@pytest.mark.parametrize("bad", ["_blk", "_sh", "_N", "_shs"])
+def test_containment_pairs_rejects_colliding_id_col(spark, bad):
+    from hadoop_common_spark.operators.dedup import containment_pairs
+
+    docs = _docs(spark).withColumn("lang", F.lit("en")).withColumnRenamed("doc_id", bad)
+    with pytest.raises(ValueError, match="collides with internal aliases"):
+        containment_pairs(docs, bad, "text", "lang", threshold=0.3)
+
+
+@pytest.mark.parametrize("max_gram_df", [None, 8])
+@pytest.mark.parametrize("bad", ["_i", "_g", "_blk", "_df", "_pc", "doc`id"])
+def test_shared_span_pairs_rejects_colliding_id_col(spark, bad, max_gram_df):
+    from hadoop_common_spark.operators.dedup import shared_span_pairs
+
+    docs = _docs(spark).withColumn("lang", F.lit("en")).withColumnRenamed("doc_id", bad)
+    with pytest.raises(ValueError, match="collides with internal aliases"):
+        shared_span_pairs(docs, bad, "text", "lang", k=4, min_span=4, max_gram_df=max_gram_df)
 
 
 def test_pair_builders_quote_unusual_id_col(spark):
@@ -1006,35 +978,6 @@ def test_shared_span_hot_gram_cap(spark):
     assert (1, 3) in uncapped and (2, 3) in uncapped
     assert (1, 3) not in capped and (2, 3) not in capped  # hot-only overlap
     assert capped[(1, 2)] == uncapped[(1, 2)] == len(cold)
-
-
-def test_containment_hot_shingle_cap(spark):
-    """containment max_shingle_df: capped discovery, exact scores —
-    survivors keep their uncapped containment values; a pair whose only
-    overlap is hot drops."""
-    from hadoop_common_spark.operators.dedup import containment_pairs
-
-    hot = "every doc shares this"       # 2 shingles, in all docs
-    docs = spark.createDataFrame(
-        [
-            (1, f"{hot} alpha beta gamma delta epsilon", "en"),
-            (2, f"{hot} alpha beta gamma delta zeta", "en"),
-            (3, f"{hot} totally different tail words", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    un = {
-        (r.id_a, r.id_b): (r.cont_a, r.cont_b)
-        for r in containment_pairs(docs, "doc_id", "text", "lang", threshold=0.3).collect()
-    }
-    capped = {
-        (r.id_a, r.id_b): (r.cont_a, r.cont_b)
-        for r in containment_pairs(
-            docs, "doc_id", "text", "lang", threshold=0.3, max_shingle_df=2
-        ).collect()
-    }
-    assert (1, 2) in capped and capped[(1, 2)] == un[(1, 2)]  # exact verify
-    assert all(3 not in p for p in capped)  # hot-only overlap dropped
 
 
 def test_shared_span_matches_python_lcs_bulk(spark):

@@ -583,3 +583,95 @@ def test_fuzz_segmented_ewma_oracle_bit_exact(spark, sf_dir, tmp_path, seed):
     )
     drows = sorted(tuple(r) for r in con.execute(q.oracle).fetchall())
     assert srows == drows  # EXACT doubles, not approx
+
+
+def _py_shingles(text: str, n: int = 3) -> set[str]:
+    """Python twin of ``operators/dedup.word_shingles``: a Java-regex
+    ``\\s+`` split (ASCII whitespace only; leading and trailing empty
+    tokens kept), then the distinct word n-grams joined by one space."""
+    import re
+
+    toks = re.split(r"\s+", text, flags=re.ASCII)
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _adversarial_corpus(rng: random.Random) -> list[tuple[str, str]]:
+    """(text, block) rows for two blocks: empty and whitespace-only texts,
+    one- and two-token texts (zero shingles), non-ASCII words and
+    non-ASCII whitespace (U+00A0 and U+3000 are not ``\\s`` in Java),
+    byte-identical duplicates, near-duplicates and excerpts, and one
+    document of about 10k tokens that many others overlap."""
+    vocab = [f"w{i}" for i in range(30)] + ["ñandú", "日本語", "Ελλάδα", "naïve", "🙂"]
+
+    def words(k: int) -> list[str]:
+        return [rng.choice(vocab) for _ in range(k)]
+
+    giant = words(10_000)
+    rows = [(" ".join(giant), "en")]
+    rows.append((" ".join(giant[4000:4000 + rng.randint(3, 80)]), "en"))  # excerpt
+    rows.append((" ".join(giant[:50]), "ü"))  # same words, other block: never pairs
+    for blk in ("en", "ü"):
+        rows += [
+            ("", blk),
+            ("   ", blk),
+            ("\t\n \t", blk),
+            ("solo", blk),
+            ("two tokens", blk),
+            (" w1 w2", blk),  # leading empty token makes a shingle " w1 w2"
+            ("w1 w2 w3 w4　w5 w6", blk),
+            ("日本語 🙂 naïve", blk),
+        ]
+        docs = [words(rng.randint(3, 60)) for _ in range(12)]
+        for d in docs[:4]:
+            near = list(d)
+            for _ in range(rng.randint(0, 3)):
+                near[rng.randrange(len(near))] = rng.choice(vocab)
+            docs.append(near)
+        texts = [" ".join(d) for d in docs]
+        texts += texts[:2]  # byte-identical duplicates
+        texts.append("  ".join(docs[5]) + " ")  # same tokens, other spacing
+        rows += [(t, blk) for t in texts]
+    return rows
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_fuzz_shingle_overlap_matches_set_brute_force(spark, seed):
+    """ngram_jaccard_pairs and containment_pairs (one sparse shingle
+    join, two score projections) equal a pure-Python set brute force over
+    every same-block pair on adversarial documents — exactly, not within
+    a tolerance: the scores are integer set sizes divided in double."""
+    from hadoop_common_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
+
+    rng = random.Random(9100 + seed)
+    rows = _adversarial_corpus(rng)
+    ids = rng.sample(range(10**6), len(rows))  # id order unrelated to content
+    thr = rng.choice([0.0, 0.05, 0.3, 0.5])
+    docs = [(i, t, b, _py_shingles(t)) for i, (t, b) in zip(ids, rows)]
+
+    want_j, want_c = {}, {}
+    for ia, _, ba, sa in docs:
+        for ib, _, bb, sb in docs:
+            inter = len(sa & sb)
+            if ba != bb or ia >= ib or inter == 0:
+                continue
+            jac = float(inter) / (float(len(sa) + len(sb)) - float(inter))
+            if jac >= thr:
+                want_j[(ia, ib)] = jac
+            ca, cb = float(inter) / float(len(sa)), float(inter) / float(len(sb))
+            if max(ca, cb) >= thr:
+                want_c[(ia, ib)] = (ca, cb)
+    assert any(v == 1.0 for v in want_j.values())  # the duplicates pair
+
+    df = spark.createDataFrame(
+        [(i, t, b) for i, t, b, _ in docs], "doc_id long, text string, lang string"
+    )
+    got_j = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in ngram_jaccard_pairs(df, "doc_id", "text", "lang", threshold=thr).collect()
+    }
+    got_c = {
+        (r.id_a, r.id_b): (r.cont_a, r.cont_b)
+        for r in containment_pairs(df, "doc_id", "text", "lang", threshold=thr).collect()
+    }
+    assert got_j == want_j, f"seed={seed} thr={thr}"
+    assert got_c == want_c, f"seed={seed} thr={thr}"

@@ -1260,33 +1260,6 @@ def test_asof_null_valued_match_stays_matched(spark):
     assert out.pid_asof == "p1" and out.val_asof is None
 
 
-def test_capped_self_join_pairs(spark):
-    """Occupancy cap: cap=None is exactly the plain self-join; a capped
-    hot bucket contributes no pairs, but its members still pair through
-    their other (cool) buckets — the banded-LSH recovery property."""
-    from hadoop_common_spark.operators.skew import capped_self_join_pairs
-
-    rows = [("hot", i) for i in range(50)] + [("cool", 1), ("cool", 2)]
-    # ids 1 and 2 ALSO share the cool bucket (other-band recovery)
-    df = spark.createDataFrame(rows, ["bk", "vid"])
-    full = {
-        (r.id_a, r.id_b)
-        for r in capped_self_join_pairs(df, ["bk"], "vid").collect()
-    }
-    assert len(full) == 50 * 49 // 2  # hot pairs + (1,2) (dedup'd across buckets)
-    capped = {
-        (r.id_a, r.id_b)
-        for r in capped_self_join_pairs(df, ["bk"], "vid", max_bucket_size=10).collect()
-    }
-    assert capped == {(1, 2)}  # hot bucket gone; cool pair survives
-    # cap larger than every bucket == uncapped
-    wide = {
-        (r.id_a, r.id_b)
-        for r in capped_self_join_pairs(df, ["bk"], "vid", max_bucket_size=1000).collect()
-    }
-    assert wide == full
-
-
 def test_range_self_join_binned_equals_theta(spark):
     """The binned range self-join must equal the naive theta form on any
     input — including pairs whose bins differ by one (the boundary the

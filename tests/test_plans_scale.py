@@ -8,6 +8,8 @@ regression here is invisible at sf0.01 and fatal at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -496,6 +498,27 @@ def test_minhash_recall_eval_no_cartesian(spark, sf_dir, registry):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "band_key" in plan  # candidate leg really joins on the band key
+
+
+@pytest.mark.parametrize(
+    "name, keys",
+    [
+        ("dedup_ngram_jaccard", ("_blk", "_sh")),
+        ("dedup_containment_pairs", ("_blk", "_sh")),
+        ("dedup_shared_span_pairs", ("_blk", "_g")),
+        ("dedup_simhash_pairs", ("chunk", "chunk_val")),
+    ],
+)
+def test_exploded_self_joins_sort_merge(spark, sf_dir, registry, name, keys):
+    """The join-strategy rule (operators/dedup.py module note): a
+    self-join over a corpus-sized exploded table plans as a SortMergeJoin
+    on the exploded keys. The planner sizes that table from the
+    un-exploded input and would otherwise broadcast a whole side — a
+    shape that only "fits" while the estimate is wrong."""
+    side = r"\[{}#\d+L?, {}#\d+L?\]".format(*keys)
+    plan = plan_of(registry[name].fn(spark, sf_dir))
+    assert re.search(rf"SortMergeJoin {side}, {side}, Inner", plan), plan
+    assert not re.search(rf"BroadcastHashJoin {side}", plan)
 
 
 def test_fleet_wide_plan_audit_clean(spark, sf_dir):

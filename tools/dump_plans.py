@@ -7,6 +7,12 @@ pruned, dimensions broadcast, top-k avoids global sorts, and Python
 stays out of the hot path. Regenerate after plan-affecting changes:
 
     python tools/dump_plans.py [sf_dir]
+
+Given query names after ``sf_dir``, it prints ``.explain("formatted")``
+for just those queries to stdout and writes no PLANS.md — the form for a
+before/after plan diff of a change:
+
+    python tools/dump_plans.py <sf_dir> dedup_ngram_jaccard > after.txt
 """
 
 from __future__ import annotations
@@ -238,8 +244,16 @@ REPRESENTATIVE = {
 }
 
 
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().rstrip()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    names = sys.argv[2:]
 
     from hadoop_common_spark.queries import load_all
     from hadoop_common_spark.session import get_spark
@@ -248,6 +262,11 @@ def main() -> None:
     spark = get_spark("dump-plans", shuffle_partitions=8)
     register_views(spark, sf_dir)
     registry = load_all()
+
+    if names:
+        for name in names:
+            print(f"## {name}\n\n{_formatted(registry[name].fn(spark, sf_dir))}\n")
+        return
 
     out = [
         "# PLANS — physical-plan evidence for the 100 TB contract",
@@ -260,10 +279,7 @@ def main() -> None:
     ]
     for name, claim in REPRESENTATIVE.items():
         df = registry[name].fn(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", f"**Demonstrates:** {claim}", "", "```", buf.getvalue().rstrip(), "```", ""]
+        out += [f"## {name}", "", f"**Demonstrates:** {claim}", "", "```", _formatted(df), "```", ""]
 
     path = os.path.join(REPO_DIR, "PLANS.md")
     with open(path, "w") as f:
